@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nebula_spark.catalog import DST, SRC
-from nebula_spark.operators.traverse import checkpoint_count
+from nebula_spark.operators.traverse import (checkpoint_count,
+                                              superstep_scope)
 
 
 def pagerank(edges: DataFrame, iterations: int = 3,
@@ -33,52 +34,31 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     (1-d) term (no redistribution), matching the common simplified form.
     Returns (vid, rank) after ``iterations`` synchronous supersteps.
 
-    Job shape (r11, guide §1.2/§2.4): supersteps chain LAZILY — one
-    Catalyst plan holds ``ckpt_every`` iterations, so a 3-iteration run is
-    ONE job at action time instead of one materialization job per
-    superstep (measured 2.5× at sf0.1), and within that job the shared
-    edge/degree/nodes subtrees are computed once (ReuseExchange dedups the
-    identical exchanges). Every ``ckpt_every`` iterations the rank frame
-    is eagerly localCheckpoint-ed so deep runs keep a flat lineage — the
-    same per-superstep materialization as before, just amortized. Each
-    superstep is still exactly one contribution shuffle keyed on dst plus
-    one vid-keyed join — the 100 TB shape is unchanged.
+    Job shape (pinned by ``tests/test_supersteps.py``): the edge dedup is
+    one :func:`checkpoint_count` (its shuffle is a job of its own under
+    AQE), and its row count sizes a :func:`superstep_scope`. Inside it
+    the supersteps chain into one plan that an eager localCheckpoint
+    runs as ONE job every ``ckpt_every`` iterations and once at the end,
+    so a small graph at 5 iterations fires 3 jobs while it is built and
+    the caller's action one more. Each superstep is still exactly one
+    contribution shuffle keyed on dst plus one vid-keyed join — the
+    100 TB shape is unchanged.
     """
-    deep = iterations > ckpt_every
-    e = edges.select(SRC, DST).distinct()
-    if deep:
-        # long runs re-read the edge frame once per checkpoint segment —
-        # cache it (unpersisted in `finally` after the in-loop eager
-        # checkpoints have consumed it)
-        e = e.persist()
-    else:
-        # shallow runs chain everything into ONE action-time job, where
-        # the loop-invariant subtrees would otherwise be re-embedded (and
-        # re-scanned) once per superstep: the 3-iteration static plan held
-        # 56 parquet scans and 0 ReusedExchange. A LAZY localCheckpoint
-        # computes each invariant once inside that same job (first touch
-        # writes the blocks, every later superstep reads them) without the
-        # dedicated materialization job an eager checkpoint/persist-and-
-        # count would cost; blocks are per-RDD-instance, so repeated bench
-        # builds recompute from parquet (no cross-run reuse), and the
-        # ContextCleaner frees them on GC (a persist() here could never be
-        # unpersisted — the returned frame is lazy).
-        e = e.localCheckpoint(eager=False)
-    nodes = (e.select(F.col(SRC).alias("vid"))
-             .union(e.select(F.col(DST).alias("vid"))).distinct())
-    deg = e.groupBy(SRC).agg(F.count(F.lit(1)).alias("outdeg"))
-    # degree is loop-invariant: join it into the edge table ONCE — each
-    # superstep then does a single rank join instead of rank+degree joins
-    ew = e.join(deg, SRC).select(SRC, DST, "outdeg")
-    if deep:
-        nodes = nodes.persist()
-        ew = ew.persist()
-    else:
-        nodes = nodes.localCheckpoint(eager=False)
-        ew = ew.localCheckpoint(eager=False)
-
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    try:
+    e, n = checkpoint_count(edges.select(SRC, DST).distinct())
+    with superstep_scope(e.sparkSession, n):
+        # the loop-invariant node set and degree-weighted edges are read
+        # by every superstep: a lazy localCheckpoint computes each once
+        # inside the first job that touches it, and later supersteps read
+        # its blocks instead of re-embedding the subtree per iteration.
+        # Degree is joined into the edge table ONCE, so each superstep
+        # does a single rank join instead of rank + degree joins.
+        nodes = (e.select(F.col(SRC).alias("vid"))
+                 .union(e.select(F.col(DST).alias("vid"))).distinct()
+                 .localCheckpoint(eager=False))
+        deg = e.groupBy(SRC).agg(F.count(F.lit(1)).alias("outdeg"))
+        ew = (e.join(deg, SRC).select(SRC, DST, "outdeg")
+              .localCheckpoint(eager=False))
+        ranks = nodes.withColumn("rank", F.lit(1.0))
         for i in range(1, iterations + 1):
             # contribution sum is decimal-stabilized (the repo's float
             # discipline): double sums are shuffle-order-dependent, and a
@@ -95,17 +75,10 @@ def pagerank(edges: DataFrame, iterations: int = 3,
                               * F.coalesce(F.col("s").cast("double"),
                                            F.lit(0.0)))
                              .alias("rank")))
-            if i % ckpt_every == 0 or (deep and i == iterations):
-                # lineage cut for deep runs; the final checkpoint also
-                # frees the persisted inputs safely (the returned frame
-                # must not depend on frames we unpersist below)
+            if i % ckpt_every == 0 and i < iterations:
+                # lineage cut for deep runs
                 ranks = ranks.localCheckpoint(eager=True)
-        return ranks
-    finally:
-        if deep:
-            e.unpersist()
-            nodes.unpersist()
-            ew.unpersist()
+        return ranks.localCheckpoint(eager=True)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -253,19 +226,18 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
            .filter(F.col("u") != F.col("v")).distinct())
     sym = und.unionAll(und.select(F.col("v").alias("u"),
                                   F.col("u").alias("v")))
-    # r11 job shape: supersteps chain lazily (one action-time job per
-    # ckpt_every=4 iterations, ReuseExchange shares the symmetric edge
-    # subtree) instead of one eager checkpoint job per superstep; deep
-    # runs persist the edges and cut lineage every 4 supersteps
+    # r11 job shape: supersteps chain lazily (one plan per ckpt_every=4
+    # iterations, ReuseExchange shares the symmetric edge subtree) instead
+    # of one eager checkpoint per superstep; deep runs persist the edges
+    # and cut lineage every 4 supersteps
     ckpt_every = 4
     deep = iterations > ckpt_every
     if deep:
         sym = sym.persist()
     else:
-        # shallow runs: one action-time job; lazy-checkpoint the loop-
-        # invariant symmetric edge list so each superstep reads the blocks
-        # the first touch wrote instead of re-embedding (re-scanning) the
-        # subtree per iteration (see pagerank above for the full rationale)
+        # shallow runs: lazy-checkpoint the loop-invariant symmetric edge
+        # list so each superstep reads the blocks the first touch wrote
+        # instead of re-embedding (re-scanning) the subtree per iteration
         sym = sym.localCheckpoint(eager=False)
     labels = (sym.select(F.col("u").alias("vid")).distinct()
               .withColumn("label", F.col("vid")))

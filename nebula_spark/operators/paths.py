@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from nebula_spark.catalog import DST, RANK, SRC, VID
 from nebula_spark.operators.traverse import (
     BROADCAST_FRONTIER_ROWS, _edge_id, _edge_id_reversed, checkpoint_count,
-    checkpoint_observe, oriented, traverse,
+    checkpoint_observe, oriented, superstep_scope, traverse,
 )
 
 
@@ -43,49 +43,27 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
     free off the checkpoint job (:func:`checkpoint_count`), so termination
     and the broadcast probe add no per-level stage.
 
-    Job shape (r11, guide §1.2): a SMALL fixed depth (``max_hops <= 3``)
-    chains all levels lazily into the caller's single action-time job —
-    no per-level materialization job, no persist churn; join strategy per
-    level is left to AQE's runtime stats. Deeper searches keep the
-    counted per-level loop (early termination on frontier death is what
-    makes an open-ended depth survivable).
+    Job shape (pinned by ``tests/test_supersteps.py``): a SMALL fixed
+    depth (``max_hops <= 3``) dedups the edges and the seeds in one
+    checkpoint job (its shuffle is a job of its own under AQE). A level
+    joins (root, vid) pairs, so the edges plus |seeds| × the vids a seed
+    reaches at the mean out-degree size a :func:`superstep_scope`. Inside
+    it all levels chain lazily into one plan that a single eager
+    localCheckpoint runs: a small graph fires 3 jobs while it is built
+    and the caller's action one more, with no per-level job and no
+    persist churn. Deeper
+    searches keep the counted per-level loop (early termination on
+    frontier death is what makes an open-ended depth survivable).
     """
     e = oriented(edges, direction)
     if edge_filter is not None:
         e = e.filter(edge_filter)
-    e = e.select(SRC, DST).distinct()
-
-    frontier = (sources.select(F.col(VID).alias("root"))
-                .distinct().withColumn(VID, F.col("root")))
-    visited = frontier.withColumn("dist", F.lit(0))
+    e = e.select(SRC, DST)
     results: DataFrame | None = None
 
-    if max_hops <= 3:           # lazy mode: one job at action time
-        # the deduped edge set is loop-invariant but would be re-embedded
-        # in every level's subtree of the single action-time plan; a LAZY
-        # localCheckpoint computes it once inside that job (no dedicated
-        # materialization job) and later levels read the blocks
-        e = e.localCheckpoint(eager=False)
-        for level in range(1, max_hops + 1):
-            nxt = (frontier.join(e, frontier[VID] == e[SRC], "inner")
-                   .select("root", F.col(DST).alias(VID)).distinct()
-                   .join(visited.select("root", VID), ["root", VID],
-                         "left_anti")
-                   .withColumn("dist", F.lit(level)))
-            # each level's output is read by THREE later subtrees (results
-            # union, every later level's visited anti-join, the next
-            # frontier) — without a cut the static plan re-embeds level L
-            # once per reader and the leaf count grows geometrically
-            # (measured: 20 parquet scans / 33 Exchange for 3 levels). A
-            # LAZY localCheckpoint linearizes the plan; the level sits
-            # directly above its distinct's shuffle, the shape where
-            # racing readers just re-read shuffle files (the r11 item-14
-            # rule), and no dedicated job is paid.
-            nxt = nxt.localCheckpoint(eager=False)
-            step = nxt.select("root", VID, "dist")
-            results = step if results is None else results.unionByName(step)
-            visited = visited.unionByName(step)
-            frontier = nxt.select("root", VID)
+    def finish(results: DataFrame | None, visited: DataFrame) -> DataFrame:
+        if results is None:
+            results = visited.limit(0)
         out = results.select(F.col("root").alias(SRC),
                              F.col(VID).alias(DST), F.col("dist"))
         if targets is not None:
@@ -93,9 +71,65 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
                                        .distinct()), DST, "left_semi")
         return out
 
+    if max_hops <= 3:
+        # edges and seeds dedup in ONE checkpoint job, kept apart by a tag
+        # column, so counting the seeds costs no job of its own. The seeds
+        # are read by the first level's join and by every level's visited
+        # anti-join; the cut evaluates them once (a Python-side seed list
+        # is a Python-worker scan per read).
+        seed = F.col("_seed")
+        both, m = checkpoint_observe(
+            e.select(F.lit(False).alias("_seed"), SRC, DST,
+                     F.lit(None).cast(sources.schema[VID].dataType)
+                     .alias("root"))
+            .unionByName(sources.select(
+                F.lit(True).alias("_seed"),
+                F.lit(None).cast(e.schema[SRC].dataType).alias(SRC),
+                F.lit(None).cast(e.schema[DST].dataType).alias(DST),
+                F.col(VID).alias("root")))
+            .distinct(),
+            n_edges=F.count(F.when(~seed, 1)),
+            n_from=F.approx_count_distinct(F.when(~seed, F.col(SRC))),
+            n_seeds=F.count(F.when(seed, 1)))
+        e = both.filter(~seed).select(SRC, DST)
+        frontier = (both.filter(seed).select("root")
+                    .withColumn(VID, F.col("root")))
+        # a level holds (root, vid) pairs: at mean out-degree d a seed
+        # reaches about d^L vids at level L, and a level's join emits at
+        # most one row per edge for each seed
+        n_edges = int(m["n_edges"])
+        d = n_edges / max(1, int(m["n_from"]))
+        reach = min(n_edges, sum(d ** lv for lv in range(1, max_hops + 1)))
+        with superstep_scope(e.sparkSession,
+                             n_edges + int(int(m["n_seeds"]) * reach)):
+            visited = frontier.withColumn("dist", F.lit(0))
+            for level in range(1, max_hops + 1):
+                nxt = (frontier.join(e, frontier[VID] == e[SRC], "inner")
+                       .select("root", F.col(DST).alias(VID)).distinct()
+                       .join(visited.select("root", VID), ["root", VID],
+                             "left_anti")
+                       .withColumn("dist", F.lit(level)))
+                # each level's output is read by THREE later subtrees
+                # (results union, every later level's visited anti-join,
+                # the next frontier) — without a cut the plan re-embeds
+                # level L once per reader and the leaf count grows
+                # geometrically (measured: 20 parquet scans / 33 Exchange
+                # for 3 levels). A LAZY localCheckpoint linearizes the
+                # plan without a job of its own.
+                nxt = nxt.localCheckpoint(eager=False)
+                step = nxt.select("root", VID, "dist")
+                results = step if results is None \
+                    else results.unionByName(step)
+                visited = visited.unionByName(step)
+                frontier = nxt.select("root", VID)
+            return finish(results, visited).localCheckpoint(eager=True)
+
+    frontier = (sources.select(F.col(VID).alias("root"))
+                .distinct().withColumn(VID, F.col("root")))
+    visited = frontier.withColumn("dist", F.lit(0))
     # persisted: every level joins the same deduped edge set — without the
     # cache each level re-scans and re-dedups the source tables
-    e = e.persist()
+    e = e.distinct().persist()
     visited = visited.persist()
     frontier = frontier.persist()
     n = frontier.count()        # seed size; later levels ride the checkpoint
@@ -116,14 +150,7 @@ def bfs_shortest_paths(edges: DataFrame, sources: DataFrame,
             old_visited.unpersist()
             frontier.unpersist()
             frontier = nxt.select("root", VID)   # checkpointed parent
-        if results is None:
-            results = visited.limit(0)
-        out = results.select(F.col("root").alias(SRC), F.col(VID).alias(DST),
-                             F.col("dist"))
-        if targets is not None:
-            out = out.join(F.broadcast(targets.select(F.col(VID).alias(DST))
-                                       .distinct()), DST, "left_semi")
-        return out
+        return finish(results, visited)
     finally:
         frontier.unpersist()
         visited.unpersist()
@@ -220,18 +247,18 @@ def bfs_min_paths(edges: DataFrame, sources: DataFrame, max_hops: int,
         e = e.withColumn("_etype", F.lit(""))
     e = e.select(SRC, DST, RANK, "_dir", "_etype")
     # r11 job shape (guide §1.2): a small fixed depth without the
-    # BOTH-direction closure rule chains all levels lazily — one job at
-    # action time instead of a checkpoint job per level; AQE picks the
-    # per-level join strategy from runtime stats. Deep/open-ended ranges
-    # keep the counted loop (frontier-death termination is what bounds
-    # them).
+    # BOTH-direction closure rule chains all levels lazily — no per-level
+    # count or persist (AQE still runs each lazy cut's shuffle stages
+    # when it is called); AQE picks the per-level join strategy from
+    # runtime stats. Deep/open-ended ranges keep the counted loop
+    # (frontier-death termination is what bounds them).
     lazy = max_hops <= 3 and not (direction == "both" and min_hops >= 1)
     if not lazy:
         e = e.persist()
     else:
-        # loop-invariant edge frame, re-embedded per level in the single
-        # action-time plan — lazy-checkpoint so it computes once in that
-        # job and later levels read blocks (see bfs_shortest_paths)
+        # loop-invariant edge frame, re-embedded per level of the chained
+        # plan — lazy-checkpoint so it computes once and later levels read
+        # its blocks
         e = e.localCheckpoint(eager=False)
     path_type = ArrayType(StructType([
         StructField("s", e.schema[SRC].dataType),
@@ -469,9 +496,9 @@ def bfs_min_dists(edges: DataFrame, sources: DataFrame, max_hops: int,
             F.lit(level).alias("hops"),
             F.array_repeat(null_hop, level).alias("path"))
 
-    if max_hops <= 3:           # lazy mode: one job at action time
-        # loop-invariant deduped edge set — computed once inside the
-        # caller's action-time job (see bfs_shortest_paths)
+    if max_hops <= 3:           # lazy mode: no per-level count
+        # loop-invariant deduped edge set — computed once, later levels
+        # read its blocks
         e = e.localCheckpoint(eager=False)
         for level in range(1, max_hops + 1):
             nxt = (frontier.join(e, frontier["end_vid"] == e[SRC], "inner")

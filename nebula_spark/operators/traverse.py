@@ -25,15 +25,60 @@ bucketed-by-src parquet so even shuffle joins co-locate.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from nebula_spark.catalog import DST, RANK, SRC, VID
+from nebula_spark.session import scoped_conf
 
 # Frontiers at or below this row count are broadcast to the hop join.
 BROADCAST_FRONTIER_ROWS = 2_000_000
+
+# Superstep rows a task (see :func:`superstep_scope`). Measured with
+# pagerank (5 iterations) against the session-width AQE plan on 4 cores:
+# one task wins at 80k edges and ties at 140k, while 500k and 1M edges lose
+# 15-40% at 1-2 tasks and win at 4 (125k-250k rows a task).
+SUPERSTEP_ROWS_PER_TASK = 100_000
+
+
+@contextmanager
+def superstep_scope(spark: SparkSession, n_rows: int) -> Iterator[int]:
+    """Run a superstep loop at a width derived from an observed row count.
+
+    p = min(session ``spark.sql.shuffle.partitions``,
+    ⌈n_rows / SUPERSTEP_ROWS_PER_TASK⌉), where ``n_rows`` is already known
+    for free off a :func:`checkpoint_count` job. A cluster-scaled session
+    width is never shrunk for big graphs, while a small graph stops paying
+    many-task stages for a few thousand rows. At p == 1 the scope also
+    turns off:
+
+    - AQE: across one partition it has nothing to adapt, yet it runs every
+      Exchange as its own job — a "lazy" ``localCheckpoint`` included, at
+      the moment it is called;
+    - whole-stage codegen: every superstep builds a new plan, so generated
+      code recompiles each round, and on one task's rows compile latency
+      outweighs the fusion win (above one task it is the other way round:
+      pagerank on 1M edges at 10 tasks ran 15-25% slower without it);
+    - broadcast joins: at one partition every join is already local, so a
+      broadcast only adds a collect job while the plan is built.
+
+    Yields p. Confs are read when a plan is compiled, so callers return a
+    frame eagerly checkpointed inside the scope: the caller's action then
+    replans nothing, and at p == 1 lazy checkpoints inside the scope fire
+    no jobs of their own.
+    """
+    sess_p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    p = max(1, min(sess_p, -(-n_rows // SUPERSTEP_ROWS_PER_TASK)))
+    confs = {"spark.sql.shuffle.partitions": str(p)}
+    if p == 1:
+        confs.update({"spark.sql.adaptive.enabled": "false",
+                      "spark.sql.codegen.wholeStage": "false",
+                      "spark.sql.autoBroadcastJoinThreshold": "-1"})
+    with scoped_conf(spark, **confs):
+        yield p
 
 
 def checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:

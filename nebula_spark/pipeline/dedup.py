@@ -18,31 +18,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nebula_spark.operators.traverse import (checkpoint_count,
-                                             checkpoint_observe)
+                                             checkpoint_observe,
+                                             superstep_scope)
 
 # MinHash universal-hash parameters: h_i(x) = (a_i * x + b_i) mod P.
 # P < 2^31 keeps a_i * x + b_i within int64 after x is reduced mod P.
 MINHASH_P = 2_147_483_647  # 2^31 - 1, Mersenne prime
 _A_SEED, _B_SEED = 0x9E3779B1, 0x85EBCA77
 
-# Scale-adaptive partitioning for the CC superstep loop (r12, guide §2.2):
-# each round shuffles (node, label) pairs — ~16-32 B a row — so ~2M rows a
-# task lands shuffle partitions in the guide's 100 MB-1 GB band. The round
-# width is derived from the OBSERVED node count (rides the seed job free)
-# and capped at the session's configured spark.sql.shuffle.partitions, so
-# a cluster-scaled config is never shrunk for big graphs while a tiny
-# graph stops paying 32-task stages and per-stage AQE planning for a few
-# thousand rows (measured at sf0.1: 2.05 s → 1.0 s for the round loop).
-_CC_ROUND_ROWS_PER_TASK = 2_000_000
-
-# Same idea for the LSH banding shuffle (explode rows are ~120 B: id, the
-# signature array and the band signature string — 1M rows/task ≈ 100 MB,
-# guide §2.2). The width is derived from the doc count observed free on
-# the signature checkpoint job and embedded as an explicit repartition
-# that the band window / band self-join then REUSES (hash(band, bsig, p)
-# satisfies their clustered distribution — no second Exchange), capped at
-# the session's configured shuffle width so cluster configs are never
-# shrunk for corpora that need them.
+# Size-derived width for the LSH banding shuffle (explode rows are ~120 B:
+# id, the signature array and the band signature string — 1M rows/task
+# ≈ 100 MB, guide §2.2). The width is derived from the doc count observed
+# free on the signature checkpoint job and embedded as an explicit
+# repartition that the band window / band self-join then REUSES
+# (hash(band, bsig, p) satisfies their clustered distribution — no second
+# Exchange), capped at the session's configured shuffle width so cluster
+# configs are never shrunk for corpora that need them.
 #
 # TWO constants because the two banded stages have per-row costs two
 # orders apart (r12 second pass, guide §1.2 step 2 — size tasks by
@@ -448,10 +439,14 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     large-star/small-star contraction, O(log² n) supersteps) remains —
     same frame contract, identical labels.
 
+    Job shape (pinned by ``tests/test_supersteps.py``): the pair dedup is
+    one :func:`checkpoint_count` (its shuffle is a job of its own under
+    AQE), whose row count sizes a :func:`superstep_scope`; inside it the
+    seed and every round are one eager-checkpoint job each, so a small
+    graph fires rounds + 3 jobs including the caller's action.
+
     Returns ``(node, cluster_id)``, one row per distinct node in *pairs*.
     """
-    from nebula_spark.session import scoped_conf
-
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # NULL endpoints carry no connectivity and are dropped outright (r12,
     # ADVICE): under least/greatest canonicalization a (x, NULL) pair would
@@ -465,105 +460,75 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     # a free projection on top of it. (A self-loop appears twice in sym
     # instead of once; every consumer is a min-aggregate or a join feeding
     # one, so labels are identical.)
-    can = (e.select(F.least("a", "b").alias("a"),
-                    F.greatest("a", "b").alias("b"))
-           .distinct())
-    sym = (can.unionByName(can.select(F.col("b").alias("a"),
-                                      F.col("a").alias("b")))
-           .persist())
-    # whole-stage codegen off for the supersteps: every iteration builds a
-    # *new* plan (fresh checkpoint lineage), so generated code recompiles
-    # per superstep — compile latency dominates the fusion win, and when
-    # the candidate pairs come from an md5-heavy LSH plan (the
-    # dedup_clusters pipeline) the first superstep would compile the whole
-    # 64-expression hash tree into one huge method. Measured at sf0.1:
-    # fresh-session 32.7 s → ~15-20 s, warm 8.4 s → ~5 s.
-    with scoped_conf(sym.sparkSession,
-                     **{"spark.sql.codegen.wholeStage": "false"}):
+    can, n_pairs = checkpoint_count(
+        e.select(F.least("a", "b").alias("a"),
+                 F.greatest("a", "b").alias("b"))
+        .distinct())
+    sym = can.unionByName(can.select(F.col("b").alias("a"),
+                                     F.col("a").alias("b")))
+    # rounds shuffle the symmetric edge list (2 rows per pair) keyed on
+    # node id, so that is the row count that sizes them
+    with superstep_scope(can.sparkSession, 2 * n_pairs) as p:
+        # the symmetric edge list is hashed ONCE onto the round layout,
+        # keyed by the message-join key, so the seed's and every round's
+        # sym-side Exchange disappears (the persisted InMemoryRelation
+        # advertises hash(a, p)); rounds shuffle only the label frame
+        sym_r = sym.repartition(p, "a").persist()
         # round 0 folded into the seed (r11 second pass): with identity
         # labels the neighbor-min round is algebraically min over the
         # CLOSED neighborhood — min(node, min of neighbors) — which is a
         # single map-side-combinable aggregate over the symmetric edge
-        # list (every node appears as `a` in sym). The identity-label
-        # frame, the sym⋈labels message join and the union it fed are
-        # gone; the probe sum rides the same checkpoint job as before.
-        # Seed stays EAGER (measured, r11 fourth pass): folding its
-        # checkpoint job into round 1 via a lazy cut saved one job
-        # barrier (28→27) but round 1's two readers re-ran the seed's
-        # post-exchange aggregation (345→599 tasks) — locally a wash
-        # (interleaved mins 2.57/3.10 vs 3.20/2.72), and at scale a
-        # full node-keyed aggregate re-run costs more than the barrier
-        # it saves. The node COUNT rides the same observation (r12):
-        # it sizes the round shuffles below and makes the empty-input
-        # convergence explicit (n == 0) instead of overloading the sum
-        # probe — a decimal(38,0) overflow now keeps iterating to
-        # max_iter (NULL total never equals) rather than conflating
-        # with emptiness (ADVICE r11).
+        # list (every node appears as `a` in sym). Seed stays EAGER
+        # (measured, r11 fourth pass): folding its checkpoint job into
+        # round 1 via a lazy cut saved one job barrier (28→27), but round
+        # 1's two readers re-ran the seed's post-exchange aggregation
+        # (345→599 tasks), and at scale a full node-keyed aggregate re-run
+        # costs more than the barrier it saves. Emptiness comes from the
+        # pair count (no pairs, no round), not the sum probe, so a
+        # decimal(38,0) overflow keeps iterating to max_iter (a NULL total
+        # never equals) instead of reading as empty input.
         labels, m0 = checkpoint_observe(
-            sym.groupBy(F.col("a").alias("node"))
-               .agg(F.min(F.least("a", "b")).alias("label")),
-            total=F.sum(F.col("label").cast("decimal(38,0)")),
-            n=F.count(F.lit(1)))
+            sym_r.groupBy(F.col("a").alias("node"))
+                 .agg(F.min(F.least("a", "b")).alias("label")),
+            total=F.sum(F.col("label").cast("decimal(38,0)")))
         prev_total = m0["total"]
-        n_nodes = int(m0["n"] or 0)
-        # round-loop partitioning derived from the observed node count
-        # (guide §2.2; see _CC_ROUND_ROWS_PER_TASK). The symmetric edge
-        # list is re-hashed ONCE onto the round layout keyed by the
-        # message-join key, so every round's sym-side Exchange
-        # disappears (the persisted InMemoryRelation advertises
-        # hash(a, p)); rounds shuffle only the shrinking label frame.
-        sess_p = int(sym.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "200"))
-        p = max(1, min(sess_p, -(-n_nodes // _CC_ROUND_ROWS_PER_TASK)))
-        sym_r = sym.repartition(p, "a").persist()
-        round_confs = {"spark.sql.shuffle.partitions": str(p)}
-        if p == 1:
-            # a single-partition round plan has nothing for AQE to adapt
-            # (no coalescing, no skew split, no join re-planning across
-            # one partition) while AQE still materializes every Exchange
-            # as its own job — at p == 1 each round collapses to ONE job
-            # under static planning (measured: 1.0 → 0.88 s round loop).
-            # Any graph big enough for p > 1 keeps AQE untouched.
-            round_confs["spark.sql.adaptive.enabled"] = "false"
-        with scoped_conf(sym.sparkSession, **round_confs):
-            for it in range(1, max_iter if n_nodes else 1):
-                msgs = (sym_r.join(labels, sym_r["a"] == labels["node"],
-                                   "inner")
-                        .select(F.col("b").alias("node"), F.col("label")))
-                nbr_min = (labels.unionByName(msgs)
-                           .groupBy("node")
-                           .agg(F.min("label").alias("label")))
-                # pointer jump: label ← label[label]. label values are
-                # node ids of the same component (induction over both
-                # rules), so the left join resolves every non-root label
-                # one more level toward the component min; roots
-                # (label[label]=label) keep their value via the coalesce.
-                # Never applied to the round-0 identity seed (folded into
-                # the aggregate above): there the jump would re-aggregate
-                # the largest pre-convergence frame for almost no
-                # compression (measured at sf0.1: always-jump 2.7 s,
-                # jump-from-1 1.8 s, no-jump 2.0 s / 7 rounds).
-                lut = nbr_min.select(F.col("node").alias("_ln"),
-                                     F.col("label").alias("_ll"))
-                nbr_min = (nbr_min.join(lut,
-                                        nbr_min["label"] == lut["_ln"],
-                                        "left")
-                           .select("node",
-                                   F.coalesce("_ll", "label")
-                                   .alias("label")))
-                # convergence probe rides the checkpoint job: per-node
-                # labels are monotone non-increasing, so the (exact,
-                # decimal) label sum strictly decreases iff any node
-                # improved — no join against the previous labels needed
-                # (r11; was one extra node-keyed join per round)
-                labels, m = checkpoint_observe(
-                    nbr_min,
-                    total=F.sum(F.col("label").cast("decimal(38,0)")))
-                if m["total"] is not None and m["total"] == prev_total:
-                    break
-                prev_total = m["total"]
-    sym.unpersist()
-    sym_r.unpersist()
+        for it in range(1, max_iter if n_pairs else 1):
+            msgs = (sym_r.join(labels, sym_r["a"] == labels["node"],
+                               "inner")
+                    .select(F.col("b").alias("node"), F.col("label")))
+            nbr_min = (labels.unionByName(msgs)
+                       .groupBy("node")
+                       .agg(F.min("label").alias("label")))
+            # pointer jump: label ← label[label]. label values are
+            # node ids of the same component (induction over both
+            # rules), so the left join resolves every non-root label
+            # one more level toward the component min; roots
+            # (label[label]=label) keep their value via the coalesce.
+            # Never applied to the round-0 identity seed (folded into
+            # the aggregate above): there the jump would re-aggregate
+            # the largest pre-convergence frame for almost no
+            # compression (measured at sf0.1: always-jump 2.7 s,
+            # jump-from-1 1.8 s, no-jump 2.0 s / 7 rounds).
+            lut = nbr_min.select(F.col("node").alias("_ln"),
+                                 F.col("label").alias("_ll"))
+            nbr_min = (nbr_min.join(lut,
+                                    nbr_min["label"] == lut["_ln"],
+                                    "left")
+                       .select("node",
+                               F.coalesce("_ll", "label")
+                               .alias("label")))
+            # convergence probe rides the checkpoint job: per-node
+            # labels are monotone non-increasing, so the (exact,
+            # decimal) label sum strictly decreases iff any node
+            # improved — no join against the previous labels needed
+            # (r11; was one extra node-keyed join per round)
+            labels, m = checkpoint_observe(
+                nbr_min,
+                total=F.sum(F.col("label").cast("decimal(38,0)")))
+            if m["total"] is not None and m["total"] == prev_total:
+                break
+            prev_total = m["total"]
+        sym_r.unpersist()
     return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
 
 

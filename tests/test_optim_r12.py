@@ -1,30 +1,50 @@
 """Focused pins for the r12 optimization-round operator changes.
 
-Guards: size-adaptive CC round partitioning (labels unchanged at any
-width), the explicit NULL-endpoint contract, the distance-only
+Guards: size-adaptive superstep partitioning (CC, pagerank and bounded
+BFS results unchanged at any width), empty and degenerate superstep
+inputs, the explicit NULL-endpoint contract, the distance-only
 shortestPath route (row-set equality with the path-carrying single
 mode, detector gating), and the narrowed LSH pair dedup.
 """
 
+import importlib
+
 from pyspark.sql import functions as F
 
 
-def test_cc_labels_identical_across_round_widths(spark):
-    # the round width is derived from the observed node count and capped
-    # at the session shuffle width — labels must be invariant to it
+def test_cc_labels_identical_across_round_widths(spark, monkeypatch):
+    # the module, not the package's re-exported traverse() function
+    traverse = importlib.import_module("nebula_spark.operators.traverse")
+    from nebula_spark.operators.algo import pagerank
+    from nebula_spark.operators.paths import bfs_shortest_paths
     from nebula_spark.pipeline import connected_components
     rows = [(0, 5), (5, 9), (9, 2), (20, 21), (22, 21), (7, 7), (40, 41)] \
         + [(i, i + 1) for i in range(100, 140)]
     pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-    want = {(r.node, r.cluster_id)
-            for r in connected_components(pairs).collect()}
+    edges = pairs.select(F.col("id_a").alias("_src"),
+                         F.col("id_b").alias("_dst"),
+                         F.lit(0).cast("long").alias("_rank"))
+    seeds = spark.createDataFrame([(0,), (22,), (100,)], "_vid long")
+
+    def run():
+        return ({(r.node, r.cluster_id)
+                 for r in connected_components(pairs).collect()},
+                {(r.vid, round(r.rank, 12))
+                 for r in pagerank(edges, iterations=5).collect()},
+                {tuple(r) for r in
+                 bfs_shortest_paths(edges, seeds, max_hops=3).collect()})
+
+    # superstep widths come from an observed row count, capped at the
+    # session shuffle width. These fixtures are far under the rows-per-task
+    # constant, so a tiny constant is what makes them run at p > 1 (AQE
+    # on); every operator's result must equal its p == 1 result
+    want = run()
+    monkeypatch.setattr(traverse, "SUPERSTEP_ROWS_PER_TASK", 8)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         for w in ("1", "7"):
             spark.conf.set("spark.sql.shuffle.partitions", w)
-            got = {(r.node, r.cluster_id)
-                   for r in connected_components(pairs).collect()}
-            assert got == want, w
+            assert run() == want, w
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
@@ -45,6 +65,29 @@ def test_cc_empty_input_converges_fast(spark):
     from nebula_spark.pipeline import connected_components
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert connected_components(pairs).count() == 0
+
+
+def test_pagerank_and_bfs_empty_edges_keep_schema(spark):
+    from nebula_spark.operators.algo import pagerank
+    from nebula_spark.operators.paths import bfs_shortest_paths
+    edges = spark.createDataFrame([], "_src long, _dst long, _rank long")
+    seeds = spark.createDataFrame([(1,)], "_vid long")
+    pr = pagerank(edges, iterations=5)
+    assert pr.collect() == []
+    assert pr.schema.simpleString() == "struct<vid:bigint,rank:double>"
+    for mh in (0, 3):
+        d = bfs_shortest_paths(edges, seeds, max_hops=mh)
+        assert d.collect() == []
+        assert d.schema.simpleString() == \
+            "struct<_src:bigint,_dst:bigint,dist:int>"
+
+
+def test_pagerank_zero_iterations_is_unit_rank(spark):
+    from nebula_spark.operators.algo import pagerank
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 1), (2, 3)],
+                                  "_src long, _dst long")
+    got = {r.vid: r.rank for r in pagerank(edges, iterations=0).collect()}
+    assert got == {1: 1.0, 2: 1.0, 3: 1.0, 5: 1.0}
 
 
 def _dists_vs_paths(spark, edges, sources, max_hops, direction):
