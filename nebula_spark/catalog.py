@@ -24,6 +24,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
+                               StructType)
+
+from nebula_spark.session import local_frame
 
 # ALL key columns are namespaced with a leading underscore (the
 # reference's own pseudo-prop spellings: `GO … YIELD E._src, E._dst,
@@ -67,6 +71,7 @@ class TagDef:
     required: list | None = None  # NOT NULL columns (DDL nullability)
     comments: dict | None = None  # per-column COMMENT text (DESC)
     schema_comment: str | None = None  # COMMENT = "…" (SHOW CREATE)
+    schema: StructType | None = None  # read schema of a path-backed table
 
 
 @dataclass
@@ -90,6 +95,7 @@ class EdgeDef:
     required: list | None = None  # NOT NULL columns (DDL nullability)
     comments: dict | None = None  # per-column COMMENT text (DESC)
     schema_comment: str | None = None  # COMMENT = "…" (SHOW CREATE)
+    schema: StructType | None = None  # read schema of a path-backed table
 
 
 @dataclass
@@ -120,9 +126,11 @@ class GraphSpace:
                    defaults: dict | None = None,
                    required: list | None = None,
                    comments: dict | None = None,
-                   schema_comment: str | None = None) -> TagDef:
+                   schema_comment: str | None = None,
+                   schema: StructType | None = None) -> TagDef:
         tag = TagDef(name, path, df, ttl_col, ttl_duration, decl, defaults,
-                     required, comments, schema_comment)
+                     required, comments, schema_comment,
+                     self._read_schema(path, schema))
         self.tags[name] = tag
         return tag
 
@@ -132,11 +140,23 @@ class GraphSpace:
                     defaults: dict | None = None,
                     required: list | None = None,
                     comments: dict | None = None,
-                    schema_comment: str | None = None) -> EdgeDef:
+                    schema_comment: str | None = None,
+                    schema: StructType | None = None) -> EdgeDef:
         edge = EdgeDef(name, path, df, ttl_col, ttl_duration, decl,
-                       defaults, required, comments, schema_comment)
+                       defaults, required, comments, schema_comment,
+                       self._read_schema(path, schema))
         self.edges[name] = edge
         return edge
+
+    def _read_schema(self, path: str | None,
+                     schema: StructType | None) -> StructType | None:
+        """The schema a path-backed table is read with: the caller's (the
+        schema of the frame just committed there), else inferred from the
+        files once here. Every later read passes it to the reader, which
+        then lists the files but starts no schema-inference job."""
+        if path is None or schema is not None:
+            return schema
+        return self.spark.read.parquet(path).schema
 
     def drop_tag(self, name: str) -> None:
         self.tags.pop(name, None)
@@ -146,7 +166,8 @@ class GraphSpace:
 
     # -- reads -------------------------------------------------------------
     def _load(self, d: TagDef | EdgeDef) -> DataFrame:
-        df = d.df if d.df is not None else self.spark.read.parquet(d.path)
+        df = d.df if d.df is not None \
+            else self.spark.read.schema(d.schema).parquet(d.path)
         # normalize legacy bare key names (vid/src/dst) from handed-in
         # frames to the namespaced key columns — only when the namespaced
         # column is absent, so user PROPS with those names (which the
@@ -229,8 +250,8 @@ class GraphSpace:
             rows.append(("space", "edges",
                          sum(c for k, _, c in rows if k == "edge")))
             self._stats = rows
-        return self.spark.createDataFrame(self._stats,
-                                          ["kind", "name", "count"])
+        return local_frame(self.spark, self._stats,
+                           ["kind", "name", "count"])
 
     def vertex(self, vids_or_df, tags: list[str] | None = None) -> DataFrame:
         """Assemble full vertices (all requested tags) for a vid set.
@@ -244,7 +265,7 @@ class GraphSpace:
                 vids_or_df = vids_or_df.withColumnRenamed("vid", VID)
             base = vids_or_df.select(VID).distinct()
         else:
-            base = self.spark.createDataFrame([(v,) for v in vids_or_df], [VID])
+            base = local_frame(self.spark, [(v,) for v in vids_or_df], [VID])
         for t in tags or list(self.tags):
             tdf = self.tag(t)
             props = [c for c in tdf.columns if c != VID]
@@ -253,6 +274,20 @@ class GraphSpace:
             )
             base = base.join(renamed, VID, "left")
         return base
+
+
+def as_nullable(dt: DataType) -> DataType:
+    """*dt* with every field, array element and map value nullable — the
+    schema the parquet reader reports for data written with *dt*."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, as_nullable(f.dataType), True,
+                                       f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(as_nullable(dt.keyType), as_nullable(dt.valueType),
+                       True)
+    return dt
 
 
 # ---------------------------------------------------------------------------

@@ -13,17 +13,22 @@ rename). On a Delta-enabled cluster the same call sites map 1:1 to
 ``MERGE INTO`` / ``DELETE FROM`` — the API is the contract, the sink is
 pluggable. Keys: vertices by ``vid``, edges by ``(src, dst, _rank)``.
 
-Scale note: upsert/delete are anti/outer joins on the key — shuffle on the
-key, same co-location as every other traversal op; at 100 TB you'd bucket
-the table by the key so the merge join is shuffle-free, which is exactly
-what Delta's Z-order/liquid clustering automates.
+Write shape: upsert/delete are anti/outer joins on the key. The rows and
+keys a statement spells out arrive as an Arrow-backed ``LocalRelation``
+(:func:`nebula_spark.session.local_frame`) with real size statistics, so
+Catalyst broadcasts that side and scans the table once without a shuffle
+— the analog of the reference sending only the statement's own KV pairs.
+The whole table is still rewritten by :func:`commit_table`. A key set
+piped from a read (``LOOKUP … | DELETE``) is a table-sized plan and joins
+by shuffling on the key; at 100 TB you'd bucket the table by the key so
+that merge join is shuffle-free, which is exactly what Delta's
+Z-order/liquid clustering automates.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame
@@ -47,7 +52,10 @@ def insert_rows(table: DataFrame, rows: DataFrame, key: list[str],
     if if_not_exists:
         fresh = rows.join(table.select(*key).distinct(), key, "left_anti")
         return table.unionByName(fresh)
-    survivors = table.join(rows.select(*key).distinct(), key, "left_anti")
+    # no distinct on the key side: a left anti join drops a row whose key
+    # appears once or many times, and an aggregate would put a shuffle
+    # stage in front of the statement's broadcast
+    survivors = table.join(rows.select(*key), key, "left_anti")
     return survivors.unionByName(rows)
 
 
@@ -82,8 +90,9 @@ def update_rows(table: DataFrame, updates: DataFrame, key: list[str],
 
 def delete_rows(table: DataFrame, keys: DataFrame,
                 key: list[str]) -> DataFrame:
-    """DELETE (VERTEX|EDGE|TAG): anti-join on the key set."""
-    return table.join(keys.select(*key).distinct(), key, "left_anti")
+    """DELETE (VERTEX|EDGE|TAG): anti-join on the key set (duplicate keys
+    need no distinct, as in :func:`insert_rows`)."""
+    return table.join(keys.select(*key), key, "left_anti")
 
 
 def delete_vertex_cascade(tags: dict[str, DataFrame],
@@ -112,16 +121,19 @@ def ttl_vacuum(table: DataFrame, ttl_col: str, ttl_duration: int) -> DataFrame:
 def commit_table(df: DataFrame, path: str) -> None:
     """Atomically replace a parquet table directory with ``df``.
 
-    Write to a temp sibling then rename — the poor-man's ACID swap that
-    Delta's transaction log replaces on a real deployment.
+    Write to a temp sibling, rename the old directory to another sibling,
+    rename the temp into place, then delete the old one — the poor-man's
+    ACID swap that Delta's transaction log replaces on a real deployment.
+    Both renames stay inside the table's parent directory, so neither
+    copies data.
     """
     parent = os.path.dirname(os.path.abspath(path))
     tmp = os.path.join(parent, f".tmp_{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(tmp)
     old = None
     if os.path.exists(path):
-        old = os.path.join(tempfile.gettempdir(), f".old_{uuid.uuid4().hex}")
-        shutil.move(path, old)
-    shutil.move(tmp, path)
+        old = os.path.join(parent, f".old_{uuid.uuid4().hex}")
+        os.rename(path, old)
+    os.rename(tmp, path)
     if old:
         shutil.rmtree(old, ignore_errors=True)

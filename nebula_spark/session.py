@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Arrow makes pandas_udf / mapInPandas / toPandas batch-transfer instead of
 # pickling row-at-a-time; non-negotiable for the pipeline operators.
@@ -94,6 +94,34 @@ def scoped_conf(spark: SparkSession, **confs: str):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, old)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Python rows as a DataFrame over an Arrow-backed ``LocalRelation``.
+
+    ``schema`` is a ``StructType``, a DDL string, or a list of column names
+    whose types are inferred from the rows the way ``createDataFrame``
+    infers them. ``createDataFrame(list, …)`` builds a ``LogicalRDD``: it
+    starts a Python-worker job each time it runs, and Catalyst sizes it at
+    ``Long.MaxValue`` bytes, so a join against it shuffles the other side.
+    This frame is converted in-process by PySpark's own local-data
+    converter (the one Spark Connect uses: Row/struct, array, map and
+    timestamp values) and carries real size statistics, so a key set
+    joined with a table is broadcast. Building it starts no job, and
+    reading it starts no Python worker.
+    """
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    rows = list(rows)
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    elif not isinstance(schema, StructType):
+        schema = spark._inferSchemaFromList(rows, names=list(schema))
+    table = LocalDataToArrowConversion.convert(rows, schema, False) if rows \
+        else to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)
 
 
 @contextmanager

@@ -69,12 +69,24 @@ def test_ttl_vacuum(spark):
     assert [r["_vid"] for r in out] == ["new"]
 
 
-def test_commit_table_swap(spark, tmp_path):
+def test_commit_table_swap(spark, tmp_path, monkeypatch):
+    from nebula_spark.operators import mutate
+    removed, rmtree = [], mutate.shutil.rmtree
+
+    def spy(d, **kw):
+        removed.append(d)
+        rmtree(d, **kw)
+
+    monkeypatch.setattr(mutate.shutil, "rmtree", spy)
     p = str(tmp_path / "t.parquet")
     commit_table(spark.range(5).toDF("n"), p)
     assert spark.read.parquet(p).count() == 5
     commit_table(spark.range(3).toDF("n"), p)
     assert spark.read.parquet(p).count() == 3
+    # the replaced directory was renamed to a sibling of the table (never
+    # copied across filesystems), then deleted with the temp directory
+    assert [os.path.dirname(d) for d in removed] == [str(tmp_path)]
+    assert os.listdir(tmp_path) == ["t.parquet"]
 
 
 def test_windowed_counts_batch_and_sessionize(spark, tpch):

@@ -172,16 +172,22 @@ def test_shortest_path_length_only_matches_path_route(spark, nba,
 
 def test_band_width_split_constants(spark):
     # join width scales up two orders before the window width, both stay
-    # p=1 for sf0.1-sized corpora and clamp at the session shuffle width
+    # p=1 for sf0.1-sized corpora and clamp at the session shuffle width.
+    # The session is widened so the 200k-row join width (7) is checked
+    # unclamped.
     from nebula_spark.pipeline import dedup as D
+    from nebula_spark.session import scoped_conf
     df = spark.range(1)          # any frame bound to the session
-    sess_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    for n, want_join in ((20_000, 1), (200_000, 7), (10**9, sess_p)):
-        assert D._band_width(df, n, D._LSH_JOIN_ROWS_PER_TASK) == \
-            min(want_join, sess_p)
-    assert D._band_width(df, 20_000) == 1          # window path, sf0.1
-    assert D._band_width(df, 200_000) == 1         # window path, sf1
-    assert D._band_width(df, 10**12) == sess_p     # cap never exceeded
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with scoped_conf(spark, **{key: "64"}):
+        for n, want_join in ((20_000, 1), (200_000, 7), (10**9, 64)):
+            assert D._band_width(df, n, D._LSH_JOIN_ROWS_PER_TASK) \
+                == want_join
+        assert D._band_width(df, 20_000) == 1          # window path, sf0.1
+        assert D._band_width(df, 200_000) == 1         # window path, sf1
+        assert D._band_width(df, 10**12) == 64         # cap never exceeded
+    assert spark.conf.get(key) == before
 
 
 def test_lsh_pairs_est_before_dedup_unchanged(spark):
